@@ -1,10 +1,15 @@
 """Typed scan layer: parquet in, fixture round-trips, partitioned sinks.
 
-All reads are metadata-only on schema (parquet footer / pinned
-StructType) — no inference pass.  The one ingest repair the corpus
-needs is ``events.ts``, whose on-disk encoding has varied across
-testdata generations; the repair is *encoding-adaptive* so any of the
-three observed encodings loads to the same UTC ``TimestampType``:
+Parquet schemas are inferred once per session, path and file
+signature, then passed to every later read of the same files as an
+explicit schema, so a warm ``load_table`` fires no Spark job (see
+:func:`_scan_key`).  CSV/JSON round-trips read back with the pinned
+``schemas.TABLES`` StructType — no inference pass.
+
+The one ingest repair the corpus needs is ``events.ts``, whose on-disk
+encoding has varied across testdata generations; the repair is
+*encoding-adaptive* so any of the three observed encodings loads to the
+same UTC ``TimestampType``:
 
 - parquet ``TIMESTAMP(NANOS)``: Spark 4.1.2 refuses it; with
   ``spark.sql.legacy.parquet.nanosAsLong=true`` it arrives as bigint
@@ -28,6 +33,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from covid_19_data_analysis_bigdata_spark import schemas
 from covid_19_data_analysis_bigdata_spark.session import ensure_confs
@@ -83,19 +89,62 @@ def events_ts_physical_type(sf_dir: str) -> str:
     return str(pq.read_schema(path).field("ts").type)
 
 
+def _scan_key(spark: SparkSession, path: str) -> tuple | None:
+    """``(applicationId, path, stat signature)`` keying the scan memos.
+
+    The signature is ``(file, size, mtime_ns)`` for every file under
+    ``path`` (or of ``path`` itself when it is one file), so rewriting
+    any file of a table yields a new key: a stale entry can cost one
+    extra inference, never a stale answer.  ``None`` (do not memoize)
+    when nothing local is found — a remote URI or a missing path.
+    """
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = sorted(
+            os.path.join(root, f) for root, _, names in os.walk(path) for f in names
+        )
+    if not files:
+        return None
+    sig = []
+    for f in files:
+        st = os.stat(f)
+        sig.append((f, st.st_size, st.st_mtime_ns))
+    return (spark.sparkContext.applicationId, path, tuple(sig))
+
+
+#: _scan_key -> raw parquet schema (before ``repair_events_ts``, so the
+#: repair stays encoding-adaptive).  Inference is a one-task Spark job
+#: per read; with the schema passed explicitly the read fires none.
+_SCHEMA_MEMO: dict[tuple, StructType] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one corpus table from ``sf_dir`` with its repaired schema."""
+    """Load one corpus table from ``sf_dir`` with its repaired schema.
+
+    Returns a fresh DataFrame on every call (self-joins need distinct
+    expression ids); only the inferred schema is memoized.
+    """
+    # Confs first: inference must always see the pinned nanosAsLong.
     ensure_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = _scan_key(spark, path)
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMA_MEMO[key] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     if name == "events":
         df = repair_events_ts(df)
     return df
 
 
-#: (applicationId, sf_dir, table) -> planned scan partition count.
-#: Probing costs one FileSourceScan partition-planning pass (no job);
-#: memoized so repeated bench samples pay it once per session.
-_SCAN_PARTS_MEMO: dict[tuple[str, str, str], int] = {}
+#: _scan_key -> planned scan partition count.  Probing costs one
+#: FileSourceScan partition-planning pass (no job); memoized so repeated
+#: bench samples pay it once per session and file signature.
+_SCAN_PARTS_MEMO: dict[tuple, int] = {}
 
 #: Measurement toggle (r15, VERDICT item 2): when False, ``spread`` is
 #: byte-for-byte ``load_table``.  Exists so tools/ab_flag.py can run a
@@ -121,12 +170,11 @@ def spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     scan partition count being under half the session's cores (strictly:
     ``n * 2 > cores`` keeps the raw scan, so exactly half still
     repartitions), probed from the actual file layout and memoized per
-    applicationId — the memo assumes the files are not rewritten
-    mid-session, which holds for the read-only testdata and any
-    immutable warehouse layout.  On a real cluster reading a 100 TB
-    table laid out as thousands of files the condition is false and
-    this is byte-for-byte ``load_table`` — no extra exchange ever
-    enters the plan.  Only operators whose map
+    applicationId, path and file signature (:func:`_scan_key`), so a
+    table rewritten mid-session is probed again.  On a real cluster
+    reading a 100 TB table laid out as thousands of files the condition
+    is false and this is byte-for-byte ``load_table`` — no extra
+    exchange ever enters the plan.  Only operators whose map
     stage is CPU-dense opt in; plain scans/filters keep the raw scan.
     """
     df = load_table(spark, sf_dir, name)
@@ -134,11 +182,12 @@ def spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     try:
         cores = spark.sparkContext.defaultParallelism
-        key = (spark.sparkContext.applicationId, sf_dir, name)
+        key = _scan_key(spark, os.path.join(sf_dir, f"{name}.parquet"))
         n = _SCAN_PARTS_MEMO.get(key)
         if n is None:
             n = df.rdd.getNumPartitions()
-            _SCAN_PARTS_MEMO[key] = n
+            if key is not None:
+                _SCAN_PARTS_MEMO[key] = n
     except Exception:
         return df
     if n * 2 > cores:

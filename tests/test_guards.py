@@ -82,6 +82,17 @@ class TestEventsTsEncodings:
     # 2024-03-01T12:34:56.789012 UTC in epoch microseconds
     EPOCH_US = 1709296496789012
 
+    @staticmethod
+    def _arrow_type(enc):
+        import pyarrow as pa
+
+        return {
+            "ns_naive": pa.timestamp("ns"),
+            "ns_utc": pa.timestamp("ns", tz="UTC"),
+            "us_naive": pa.timestamp("us"),
+            "us_utc": pa.timestamp("us", tz="UTC"),
+        }[enc]
+
     def _write(self, tmp_path, arrow_type):
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -107,16 +118,9 @@ class TestEventsTsEncodings:
         "enc", ["ns_naive", "ns_utc", "us_naive", "us_utc"]
     )
     def test_batch_load_normalizes(self, spark, tmp_path, enc):
-        import pyarrow as pa
-
         from covid_19_data_analysis_bigdata_spark.sources.io import load_table
 
-        arrow_type = {
-            "ns_naive": pa.timestamp("ns"),
-            "ns_utc": pa.timestamp("ns", tz="UTC"),
-            "us_naive": pa.timestamp("us"),
-            "us_utc": pa.timestamp("us", tz="UTC"),
-        }[enc]
+        arrow_type = self._arrow_type(enc)
         sf = self._write(tmp_path, arrow_type)
         df = load_table(spark, sf, "events")
         assert dict(df.dtypes)["ts"] == "timestamp", enc
@@ -127,23 +131,31 @@ class TestEventsTsEncodings:
         got = row["ts"].replace(tzinfo=timezone.utc)
         assert int(got.timestamp() * 1_000_000) == self.EPOCH_US, enc
 
+    def test_in_place_rewrite_invalidates_schema_memo(self, spark, tmp_path):
+        """load_table memoizes the inferred parquet schema per file
+        signature; rewriting the same path with another ``ts`` encoding
+        mid-session must re-infer, never reuse the old schema."""
+        from covid_19_data_analysis_bigdata_spark.sources.io import load_table
+
+        # Each step changes the raw Spark type of ts: bigint ->
+        # timestamp_ntz -> timestamp -> bigint.
+        for enc in ["ns_naive", "us_naive", "us_utc", "ns_utc"]:
+            sf = self._write(tmp_path, self._arrow_type(enc))
+            df = load_table(spark, sf, "events")
+            assert dict(df.dtypes)["ts"] == "timestamp", enc
+            got = df.collect()[0]["ts"].replace(tzinfo=timezone.utc)
+            assert int(got.timestamp() * 1_000_000) == self.EPOCH_US, enc
+
     @pytest.mark.parametrize(
         "enc", ["ns_naive", "ns_utc", "us_naive", "us_utc"]
     )
     def test_stream_source_normalizes(self, spark, tmp_path, enc):
-        import pyarrow as pa
-
         from covid_19_data_analysis_bigdata_spark.streaming.ops import (
             events_stream,
             run_to_table,
         )
 
-        arrow_type = {
-            "ns_naive": pa.timestamp("ns"),
-            "ns_utc": pa.timestamp("ns", tz="UTC"),
-            "us_naive": pa.timestamp("us"),
-            "us_utc": pa.timestamp("us", tz="UTC"),
-        }[enc]
+        arrow_type = self._arrow_type(enc)
         sf = self._write(tmp_path, arrow_type)
         ev = events_stream(spark, sf)
         assert dict(ev.dtypes)["ts"] == "timestamp", enc
@@ -151,6 +163,41 @@ class TestEventsTsEncodings:
         row = out.collect()[0]
         got = row["ts"].replace(tzinfo=timezone.utc)
         assert int(got.timestamp() * 1_000_000) == self.EPOCH_US, enc
+
+
+def _newest_job_id(spark):
+    """Id of the newest job in the status store, once the listener bus
+    has applied every posted event (-1 before the first job)."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    if jobs.size() == 0:
+        return -1
+    return max(jobs.apply(0).jobId(), jobs.apply(jobs.size() - 1).jobId())
+
+
+def test_warm_load_table_fires_no_job(spark, sf_dir):
+    """Schema inference is a one-task Spark job; load_table pays it once
+    per table and file signature, so a warm call fires no job and yields
+    the schema inference would."""
+    from covid_19_data_analysis_bigdata_spark.sources.io import (
+        load_table,
+        repair_events_ts,
+    )
+
+    names = sorted(
+        p.name[: -len(".parquet")] for p in pathlib.Path(sf_dir).glob("*.parquet")
+    )
+    assert names, sf_dir
+    for name in names:
+        load_table(spark, sf_dir, name)
+        before = _newest_job_id(spark)
+        df = load_table(spark, sf_dir, name)
+        assert _newest_job_id(spark) == before, f"warm load_table({name}) ran a job"
+        inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        if name == "events":
+            inferred = repair_events_ts(inferred)
+        assert df.schema == inferred.schema, name
 
 
 class TestStrictComparator:

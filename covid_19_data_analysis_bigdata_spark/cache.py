@@ -19,6 +19,16 @@ long-lived session that re-builds query DAGs per invocation:
    ``unpersist(blocking=False)``-ed.  Eviction is always safe: an
    evicted frame that is still referenced simply recomputes.
 
+Cached outputs are sized by AQE.  Spark's default plans a persisted
+frame with final-stage shuffle coalescing off, so a frame whose plan
+ends in a shuffle keeps every ``spark.sql.shuffle.partitions``
+partition, and each later scan of it runs that many tasks however few
+rows it holds.  ``session.RUNTIME_CONFS`` sets
+``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``, so AQE
+coalesces each cached output from its measured bytes: the ≤600-row
+trade graph is stored as one partition, a large frame keeps its
+parallelism.  No call site coalesces by hand.
+
 Correctness guard: ``semanticHash`` is a 32-bit hash, so a hit is only
 trusted after ``sameSemantics`` confirms the plans are equivalent;
 colliding-but-different plans get separate bucket slots.

@@ -43,73 +43,75 @@ def query(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-#: Front-of-registry order for round 14.  External correctness sweeps
-#: sample the first 50 registry entries in iteration order.  The
-#: never-sampled pool CLOSED in r13 (530/530 external coverage), so
-#: from r14 the window's job is FRESHNESS (SCALE.md §"r14 window
-#: plan"): (1) the round's new ids first (never-sampled by
-#: construction), (2) the r13-verdict front-loads — the post-fix
-#: ``agg_decimal_exact`` plus the two ids whose only driver rows are
-#: stale r04 hash-fails fixed since r05 — and the two r14-changed
-#: queries, (3) a refresh of the oldest external evidence: 30 of the
-#: 49 ids whose latest row is r03 (exactly at the ≤60% share cap vs
-#: the r03 artifact; the rest roll to r15) back-filled with 13 of the
-#: 34 r02-stale ids.
+#: Front-of-registry order for round 16.  External correctness sweeps
+#: sample the first 50 registry entries in iteration order.  A round is
+#: one such sample: it closes when its CORRECTNESS_rN.json is committed,
+#: and ROUND_MARKER then holds N, the last closed round.  The PRs in
+#: between belong to round N+1 and leave both the marker and this
+#: window alone (the CHECK_rN sweep artifacts are numbered per sweep,
+#: not per round).  Round 15 re-sampled the round-14 window, so this
+#: window is rebuilt by FRESHNESS (SCALE.md §"r14 window plan"):
+#: (1) the one id never sampled, (2) the two queries whose cached
+#: edge frames this round re-partitions, (3) every strong id whose
+#: latest external row is r02 (18) or r03 (19), back-filled with the
+#: first 10 r04-stale ids in registration order.  Largest share with
+#: any prior window: 20 ids (r03), under the 30-id cap.
 _WINDOW_PRIORITY: list[str] = [
-    # ---- r14-new ids ----
-    "stream_interval_join_right",
-    "llm_ann_beam",
-    # ---- r13-verdict front-loads + r14-changed queries ----
-    "agg_decimal_exact",     # scaled-BIGINT emit: first hash-safe driver row
-    "dq_expectations",       # stale r04 fail; green in every sweep since r05
-    "etl_incremental_agg",   # stale r04 fail; green in every sweep since r05
-    "unpivot_melt",          # r14: checked output shrunk to summary
-    "dq_id_gaps",            # r14: deterministic key-range sharding
-    # ---- freshness refresh: 30 of the 49 r03-stale ids ----
-    "str_funcs",
-    "str_split_regex",
-    "date_funcs",
-    "ts_funcs",
-    "cond_funcs",
-    "hash_funcs",
-    "array_funcs",
-    "array_hof",
-    "map_funcs",
-    "json_funcs",
-    "safe_arith_funcs",
-    "bit_funcs",
-    "json_variant_funcs",
-    "udf_python_scalar",
-    "udf_pandas_vectorized",
-    "udaf_applyinpandas",
-    "udaf_pandas_grouped_agg",
-    "udtf_table_fn",
-    "multimodal_decode_stub",
-    "udf_mapinarrow",
-    "obs_metrics_passthrough",
-    "udtf_analyze_polymorphic",
-    "stream_tumbling_counts",
-    "stream_sliding",
-    "stream_session",
-    "stream_watermark_late",
-    "stream_dedup",
-    "stream_stateful_running",
-    "stream_static_join",
-    "stream_stream_join",
-    # ---- freshness refresh: 13 of the 34 r02-stale ids ----
-    "filter_simple",
-    "filter_null_handling",
-    "cast_types",
-    "sample_rows",
-    "limit_offset",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    "set_union_by_name",
-    "join_cross",
-    "join_null_safe",
-    "join_shuffle_hash",
+    # ---- never sampled ----
+    "llm_ann_recall",
+    # ---- cached-plan partitioning changed this round ----
+    "graph_reciprocity",
+    "graph_pagerank",
+    # ---- freshness refresh: the 18 r02-stale strong ids ----
+    "sample_stratified",
+    "set_except_all",
+    "set_intersect_all",
+    "join_range_binned",
+    "agg_ratio",
+    "agg_count_distinct",
+    "agg_stats",
+    "agg_percentile",
+    "agg_filtered",
+    "agg_collect",
+    "agg_rollup",
+    "agg_cube",
+    "agg_grouping_sets",
+    "pivot_wide",
+    "agg_histogram",
+    "agg_mode",
+    "agg_corr_exact",
+    "agg_listagg",
+    # ---- freshness refresh: the 19 r03-stale ids ----
+    "stream_file_sink",
+    "stream_foreach_batch",
+    "stream_multi_batch_replay",
+    "llm_dedup_exact",
+    "llm_dedup_fuzzy",
+    "llm_sim_cosine_pairs",
+    "llm_sim_topk",
+    "llm_knn_per_query",
+    "llm_centroids",
+    "llm_semantic_groupby",
+    "llm_text_tokens",
+    "llm_tfidf",
+    "llm_text_stats",
+    "llm_ngrams",
+    "llm_multimodal_struct",
+    "llm_inverted_index",
+    "llm_pmi_cooccur",
+    "llm_lang_id",
+    "llm_quality_score",
+    # ---- back-fill: the first 10 r04-stale ids ----
+    "math_funcs",
+    "ts_trend_forecast",
+    "ts_resample_ffill",
+    "etl_upsert_scd1",
+    "etl_keep_latest",
+    "etl_scd2_intervals",
+    "etl_compact_small_files",
+    "etl_partition_overwrite",
+    "dq_profile_columns",
+    "etl_cascade_delete",
 ]
 
 

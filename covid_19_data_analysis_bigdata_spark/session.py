@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 import re
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -36,19 +37,30 @@ def _env_bool(name: str, default: str) -> str:
         return "true"
     if v in ("false", "0", "no", "off"):
         return "false"
-    return default
+    return _ignored(name, raw, default)
 
 
 def _env_size(name: str, default: str) -> str:
     """Read a byte-size env override (Spark size-string: '64m', '1g',
-    '0', '262144b', ...), falling back to the default on malformed
-    input rather than failing session build."""
+    '0', '262144b', '64mb', '1gb', ...), falling back to the default on
+    malformed input rather than failing session build.  Spark's
+    byte-string parser takes both the one-letter and the two-letter
+    suffixes, so both pass through unchanged."""
     raw = os.environ.get(name)
     if raw is None:
         return default
     v = raw.strip().lower()
-    if re.fullmatch(r"\d+[bkmgt]?", v):
+    if re.fullmatch(r"\d+(?:b|[kmgt]b?)?", v):
         return v
+    return _ignored(name, raw, default)
+
+
+def _ignored(name: str, raw: str, default: str) -> str:
+    """Print a one-line stderr warning that an override was ignored."""
+    print(
+        f"warning: ignoring ${name}={raw!r} (unrecognized); using {default!r}",
+        file=sys.stderr,
+    )
     return default
 
 #: Runtime-settable SQL confs every query depends on.
@@ -90,6 +102,22 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": _env_size(
         "SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "64m"
     ),
+    # Let AQE coalesce the final shuffle of every persisted plan.  The
+    # Spark default (false) makes CacheManager plan each persisted frame
+    # with final-stage shuffle optimizations off, so a cached frame whose
+    # plan ends in a shuffle keeps all spark.sql.shuffle.partitions
+    # partitions and every later scan of it runs that many tasks — 32
+    # tasks over the ≤600-row nation trade graph graph_pagerank and
+    # graph_reciprocity iterate on.  With it on, each cached output is
+    # sized from its measured bytes (a tiny frame becomes 1 partition, a
+    # large one keeps its parallelism).  Measured at sf0.1, local[4] on a
+    # 4-vCPU VM: a traced perfbench etl_iterative pass ran 381 -> 39
+    # tasks and 3.55 -> 1.42 executor CPU-s; untraced, cpu_s fell
+    # 5.15 -> 3.84 s (medians of 10 alternating pairs, 10/10 wins).  No
+    # env override: the setting changes how cached outputs are
+    # partitioned, never their rows, and no workload here wants cached
+    # output held at the fixed shuffle width.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Runtime-settable, so externally-built sessions (the driver's plain
     # session defaults to 200) also get a parallelism-matched value; AQE
     # coalesces further downward per-stage.  Overridable for bench A/B

@@ -98,19 +98,24 @@ def _scan_key(spark: SparkSession, path: str) -> tuple | None:
     extra inference, never a stale answer.  ``None`` (do not memoize)
     when nothing local is found — a remote URI or a missing path.
     """
-    if os.path.isfile(path):
-        files = [path]
-    else:
-        files = sorted(
-            os.path.join(root, f) for root, _, names in os.walk(path) for f in names
-        )
+    files = _table_files(path)
     if not files:
         return None
-    sig = []
-    for f in files:
-        st = os.stat(f)
-        sig.append((f, st.st_size, st.st_mtime_ns))
-    return (spark.sparkContext.applicationId, path, tuple(sig))
+    return (spark.sparkContext.applicationId, path, tuple(map(_stat_sig, files)))
+
+
+def _table_files(path: str) -> list[str]:
+    """``path`` itself when it is one file, else every file under it."""
+    if os.path.isfile(path):
+        return [path]
+    return sorted(
+        os.path.join(root, f) for root, _, names in os.walk(path) for f in names
+    )
+
+
+def _stat_sig(path: str) -> tuple[str, int, int]:
+    st = os.stat(path)
+    return (path, st.st_size, st.st_mtime_ns)
 
 
 #: _scan_key -> raw parquet schema (before ``repair_events_ts``, so the
@@ -195,19 +200,39 @@ def spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df.repartition(cores)
 
 
-def _source_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of the source parquet files (name+size+mtime).
+#: ``(file, size, mtime_ns)`` -> sha256 of the file's bytes, so a warm
+#: :func:`_source_fingerprint` stats files and reads none.
+_CONTENT_MEMO: dict[tuple[str, int, int], str] = {}
 
-    Keys every cached fixture: regenerating the testdata changes the
-    fingerprint, so stale fixtures are abandoned instead of silently
-    compared against a fresh oracle.
+
+def _file_sha256(path: str) -> str:
+    sig = _stat_sig(path)
+    digest = _CONTENT_MEMO.get(sig)
+    if digest is None:
+        h = hashlib.sha256()
+        with open(path, "rb") as f:
+            for chunk in iter(lambda: f.read(1 << 20), b""):
+                h.update(chunk)
+        digest = _CONTENT_MEMO[sig] = h.hexdigest()
+    return digest
+
+
+def _source_fingerprint(sf_dir: str) -> str:
+    """Content fingerprint of the source parquet files (names + bytes).
+
+    Keys every cached fixture, the CHECK artifact headers and the sketch
+    pins.  It is a sha256 over each file's relative name and the sha256
+    of its bytes, so regenerated testdata with different bytes gets a
+    new fingerprint (stale fixtures are abandoned instead of silently
+    compared against a fresh oracle), while a byte-identical
+    re-materialization or a bare touch keeps it.  File hashes are
+    memoized per ``(file, size, mtime_ns)``: only a new or rewritten
+    file is read again.
     """
-    h = hashlib.md5()
+    h = hashlib.sha256()
     for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        st = os.stat(p)
-        h.update(
-            f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}".encode()
-        )
+        for f in _table_files(p):
+            h.update(f"{os.path.relpath(f, sf_dir)}:{_file_sha256(f)}\n".encode())
     return h.hexdigest()[:12]
 
 

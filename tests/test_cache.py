@@ -156,3 +156,75 @@ def test_ann_memo_eviction_unpersists_registry_frames(spark, fresh_registry):
     finally:
         textprep._ANN_MODEL_MEMO.clear()
         textprep._ANN_MODEL_MEMO.update(saved)
+
+
+_CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+_TRADE_GRAPH = ("graph_reciprocity", "graph_pagerank")
+
+
+def _graph_rows_and_max_tasks(spark, sf_dir):
+    """Run the trade-graph queries cold, then warm under a job group;
+    return each query's sorted rows and the most tasks any warm stage
+    completed (read from the status store)."""
+    import uuid
+
+    import __spark_entry__ as E
+
+    qs = E.queries()
+    for n in _TRADE_GRAPH:
+        qs[n](spark, sf_dir).collect()
+    sc = spark.sparkContext
+    group = f"cached-partitioning-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = {
+            n: sorted(tuple(r) for r in qs[n](spark, sf_dir).collect())
+            for n in _TRADE_GRAPH
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    stages = {
+        s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds
+    }
+    assert stages, "the warm pass fired no stage"
+    tasks = [st.getStageInfo(s).numCompletedTasks for s in stages]
+    return rows, max(tasks)
+
+
+def test_cached_trade_graph_scans_are_sized_by_aqe(
+    spark, sf_dir, fresh_registry, monkeypatch
+):
+    """Persisted plans keep AQE's final-stage coalescing: warm
+    ``graph_reciprocity`` + ``graph_pagerank`` run no stage wider than
+    the session's parallelism (with Spark's default, the ≤600-row
+    cached edge frames keep all ``spark.sql.shuffle.partitions``
+    partitions and every rescan runs that many tasks), and the rows
+    are identical with the setting off."""
+    from covid_19_data_analysis_bigdata_spark import session
+
+    cores = spark.sparkContext.defaultParallelism
+    on_rows, on_max = _graph_rows_and_max_tasks(spark, sf_dir)
+    assert on_max <= cores, (
+        f"a warm trade-graph stage ran {on_max} tasks > {cores} cores"
+    )
+
+    # load_table re-applies RUNTIME_CONFS, so the off leg patches the
+    # table as well as the live session; both are restored below.
+    base = spark.conf.get(_CACHED_PARTITIONING)
+    monkeypatch.setitem(session.RUNTIME_CONFS, _CACHED_PARTITIONING, "false")
+    cache.clear_cache()
+    spark.catalog.clearCache()
+    try:
+        spark.conf.set(_CACHED_PARTITIONING, "false")
+        off_rows, off_max = _graph_rows_and_max_tasks(spark, sf_dir)
+    finally:
+        cache.clear_cache()
+        spark.catalog.clearCache()
+        spark.conf.set(_CACHED_PARTITIONING, base)
+    assert off_rows == on_rows
+    if int(spark.conf.get("spark.sql.shuffle.partitions")) > cores:
+        # Control: with the setting off the same pass does run wider
+        # stages, so the bound above is what the setting buys.
+        assert off_max > cores

@@ -296,6 +296,65 @@ def test_committed_check_artifact_not_stale():
     )
 
 
+def test_source_fingerprint_is_content_addressed(tmp_path, monkeypatch, sf_dir):
+    """Data identity follows bytes, not mtimes: a touched copy keeps its
+    fingerprint, a changed byte moves it, and a warm call reads no file
+    (per-file hashes are memoized by ``(file, size, mtime_ns)``)."""
+    import os
+    import shutil
+
+    from covid_19_data_analysis_bigdata_spark.sources import io
+
+    for p in pathlib.Path(sf_dir).glob("*.parquet"):
+        shutil.copy(p, tmp_path / p.name)
+    copy = str(tmp_path)
+    fp = io._source_fingerprint(copy)
+    assert fp == io._source_fingerprint(sf_dir)
+
+    def no_reads(*a, **k):
+        raise AssertionError("a warm fingerprint read file bytes")
+
+    with monkeypatch.context() as m:
+        m.setattr(io, "open", no_reads, raising=False)
+        assert io._source_fingerprint(copy) == fp
+
+    nation = tmp_path / "nation.parquet"
+    st = nation.stat()
+    os.utime(nation, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert io._source_fingerprint(copy) == fp
+
+    data = bytearray(nation.read_bytes())
+    data[len(data) // 2] ^= 0xFF
+    nation.write_bytes(bytes(data))
+    assert io._source_fingerprint(copy) != fp
+
+
+@pytest.mark.parametrize(
+    "raw, want, warned",
+    [("64mb", "64mb", False), ("1GB", "1gb", False), ("0", "0", False),
+     ("512k", "512k", False), ("64 mb", "8m", True), ("lots", "8m", True)],
+)
+def test_env_size_accepts_spark_suffixes_and_warns(
+    monkeypatch, capsys, raw, want, warned
+):
+    from covid_19_data_analysis_bigdata_spark import session
+
+    monkeypatch.setenv("SIZE_OVERRIDE", raw)
+    assert session._env_size("SIZE_OVERRIDE", "8m") == want
+    assert ("ignoring $SIZE_OVERRIDE" in capsys.readouterr().err) == warned
+
+
+def test_env_bool_warns_when_it_ignores_an_override(monkeypatch, capsys):
+    from covid_19_data_analysis_bigdata_spark import session
+
+    monkeypatch.setenv("BOOL_OVERRIDE", "maybe")
+    assert session._env_bool("BOOL_OVERRIDE", "true") == "true"
+    assert "ignoring $BOOL_OVERRIDE" in capsys.readouterr().err
+    monkeypatch.setenv("BOOL_OVERRIDE", " Off")
+    assert session._env_bool("BOOL_OVERRIDE", "true") == "false"
+    assert capsys.readouterr().err == ""
+
+
 class TestOracleTypeLattice:
     """The round-4 driver failures (dq_expectations, etl_incremental_agg)
     were DuckDB ``sum(BIGINT)`` → HUGEINT widenings: values identical,
